@@ -92,7 +92,8 @@ class RasterMeta:
 # FlatMapGroupsInPandas).  Like every module-level pandas_udf in this
 # library, a cached wrapper holds a JVM handle for the session that
 # first used it — one SparkSession per process (the tests/bench/driver
-# contract).
+# contract).  The two private JVM calls are pinned to the pyspark
+# release they were checked on (tests/test_raster.py).
 
 
 def _map_in_pandas_cached(df: DataFrame, udf) -> DataFrame:
@@ -129,13 +130,20 @@ def _arr(buf: bytes, meta: RasterMeta) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
+def pack_tile(pdf, ts: int, dtype: str) -> np.ndarray:
+    """The dense ``ts`` x ``ts`` tile of one tile group's pixel rows
+    ``(iy, ix, value)`` (see :func:`tile_keyed`); absent pixels are 0."""
+    a = np.zeros((ts, ts), dtype=np.dtype(dtype))
+    a[pdf["iy"].to_numpy(), pdf["ix"].to_numpy()] = pdf["value"].to_numpy()
+    return a
+
+
 @lru_cache(maxsize=128)
 def _pack_udf(ts: int, dtype: str):
     def _pack(pdf):
         import pandas as pd
 
-        a = np.zeros((ts, ts), dtype=np.dtype(dtype))
-        a[pdf["iy"].to_numpy(), pdf["ix"].to_numpy()] = pdf["value"].to_numpy()
+        a = pack_tile(pdf, ts, dtype)
         return pd.DataFrame(
             {
                 "scale": [0],
@@ -154,13 +162,20 @@ def long_to_tiles(df_long: DataFrame, meta: RasterMeta, value_col: str = "value"
     tiles.  One shuffle on the tile key (groupBy), then a pure-numpy
     scatter per group — the packing analog of ``da.from_delayed``.
     """
-    ts = meta.tile
+    keyed = tile_keyed(df_long, meta.tile, value_col)
+    return _apply_in_pandas_cached(keyed.groupBy("c", "ty", "tx"), _pack_udf(meta.tile, meta.dtype))
+
+
+def tile_keyed(df_long: DataFrame, ts: int, value_col: str = "value") -> DataFrame:
+    """Key each pixel of a long-form raster ``(c?, y, x, value)`` by its
+    tile: ``(c, iy, ix, ty, tx, value)``, ``iy``/``ix`` the offset in
+    the ``ts`` x ``ts`` tile ``(ty, tx)``."""
     has_c = "c" in df_long.columns
     # one selectExpr parse instead of ~15 Column round trips (this
     # projection sits in every rt_*/rv_* construction); expressions are
     # term-identical to the former Column forms (cast-then-mod, floor of
     # the double division)
-    keyed = df_long.selectExpr(
+    return df_long.selectExpr(
         ("CAST(c AS INT) AS c" if has_c else "0 AS c"),
         f"(CAST(y AS BIGINT) % {ts}) AS iy",
         f"(CAST(x AS BIGINT) % {ts}) AS ix",
@@ -168,7 +183,6 @@ def long_to_tiles(df_long: DataFrame, meta: RasterMeta, value_col: str = "value"
         f"CAST(FLOOR(x / {ts}) AS BIGINT) AS tx",
         f"`{value_col}` AS value",
     )
-    return _apply_in_pandas_cached(keyed.groupBy("c", "ty", "tx"), _pack_udf(ts, meta.dtype))
 
 
 @lru_cache(maxsize=128)
@@ -897,9 +911,17 @@ def long3d_to_tiles(df_long: DataFrame, meta: RasterMeta, value_col: str = "valu
     """Pack a sparse long-form volume ``(c?, z, y, x, value)`` into
     z-plane tiles.  One shuffle on (c, z, ty, tx), then a numpy scatter
     per group — same plan as :func:`long_to_tiles` with z in the key."""
-    ts = meta.tile
+    return _apply_in_pandas_cached(
+        tile3d_keyed(df_long, meta.tile, value_col).groupBy("c", "z", "ty", "tx"),
+        _pack3d_udf(meta.tile, meta.dtype),
+    )
+
+
+def tile3d_keyed(df_long: DataFrame, ts: int, value_col: str = "value") -> DataFrame:
+    """:func:`tile_keyed` for a volume ``(c?, z, y, x, value)``:
+    ``(c, z, iy, ix, ty, tx, value)``."""
     has_c = "c" in df_long.columns
-    keyed = df_long.select(
+    return df_long.select(
         (F.col("c").cast("int") if has_c else F.lit(0)).alias("c"),
         F.col("z").cast("long").alias("z"),
         (F.col("y").cast("long") % ts).alias("iy"),
@@ -909,10 +931,6 @@ def long3d_to_tiles(df_long: DataFrame, meta: RasterMeta, value_col: str = "valu
         F.col(value_col).alias("value"),
     )
 
-    return _apply_in_pandas_cached(
-        keyed.groupBy("c", "z", "ty", "tx"), _pack3d_udf(ts, meta.dtype)
-    )
-
 
 @lru_cache(maxsize=128)
 def _pack3d_udf(ts: int, dtype: str):
@@ -920,8 +938,7 @@ def _pack3d_udf(ts: int, dtype: str):
         import pandas as pd
 
         c, z, ty, tx = (int(k) for k in key)
-        a = np.zeros((ts, ts), dtype=np.dtype(dtype))
-        a[pdf["iy"].to_numpy(), pdf["ix"].to_numpy()] = pdf["value"].to_numpy()
+        a = pack_tile(pdf, ts, dtype)
         return pd.DataFrame(
             {"scale": [0], "c": [c], "z": [z], "ty": [ty], "tx": [tx], "tile": [_buf(a)]}
         )

@@ -30,16 +30,21 @@ group dispatch, selection, on_bad_files) and ``_io/io_raster.py``
 from __future__ import annotations
 
 import bz2
+import functools
 import gzip
 import json
 import os
 import zlib
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
-from spatialdata_spark.operators.raster import TILE_SCHEMA, RasterMeta, long_to_tiles, tiles_to_long
+from spatialdata_spark.operators.raster import (
+    TILE_SCHEMA, RasterMeta, pack_tile, tile3d_keyed, tile_keyed, tiles_to_long,
+)
 from spatialdata_spark.transformations import BaseTransformation
 
 ZARR_FORMAT = 2
@@ -214,6 +219,52 @@ def _read_json(path: str) -> dict:
         return json.load(f)
 
 
+def _v2_key(nums: tuple[int, ...]) -> str:
+    return ".".join(str(k) for k in nums) or "0"
+
+
+def _write_array_doc(
+    path: str,
+    dtype: np.dtype,
+    shape,
+    chunks,
+    compressor: str | None,
+    attrs: dict | None,
+    zarr_format: int,
+):
+    """Write one array's metadata document (``.zarray`` [+ ``.zattrs``]
+    or v3 ``zarr.json``); returns the chunk codec and key function."""
+    if zarr_format == 3:
+        from spatialdata_spark.sources import zarr3
+
+        # v3 has no raw-zlib codec; gzip is the stdlib equivalent
+        codec = "gzip" if compressor == "zlib" else compressor
+        meta3 = zarr3.array_meta(tuple(shape), tuple(chunks), dtype, codec, attrs)
+        _write_json(os.path.join(path, "zarr.json"), meta3)
+        return codec, zarr3.parse_array_meta(meta3)["key"]
+    arr_meta = {
+        "zarr_format": ZARR_FORMAT,
+        "shape": list(shape),
+        "chunks": list(chunks),
+        "dtype": dtype.str,
+        "compressor": _compressor_doc(compressor),
+        "fill_value": 0,
+        "order": "C",
+        "filters": None,
+    }
+    _write_json(os.path.join(path, ".zarray"), arr_meta)
+    if attrs is not None:
+        _write_json(os.path.join(path, ".zattrs"), attrs)
+    return compressor, _v2_key
+
+
+def _write_chunk_file(path: str, name: str, payload: bytes) -> None:
+    fpath = os.path.join(path, *name.split("/"))
+    os.makedirs(os.path.dirname(fpath), exist_ok=True)
+    with open(fpath, "wb") as f:
+        f.write(payload)
+
+
 def write_group(path: str, attrs: dict | None = None, zarr_format: int = 2) -> None:
     if zarr_format == 3:
         from spatialdata_spark.sources import zarr3
@@ -248,36 +299,10 @@ def zarr_write_array(
     so executors do the chunk encoding.  ``zarr_format=3`` emits the
     v3 layout (``zarr.json`` + ``c/``-prefixed chunk keys) — reference
     container V02, _io/format.py:56-267."""
-    from spatialdata_spark.sources import zarr3
-
     a = np.ascontiguousarray(arr)
     if chunks is None:
         chunks = a.shape
-    if zarr_format == 3:
-        # v3 has no raw-zlib codec; gzip is the stdlib equivalent
-        eff = "gzip" if compressor == "zlib" else compressor
-        meta3 = zarr3.array_meta(a.shape, chunks, a.dtype, eff, attrs)
-        _write_json(os.path.join(path, "zarr.json"), meta3)
-        keyfn = zarr3.parse_array_meta(meta3)["key"]
-    else:
-        eff = compressor
-        meta = {
-            "zarr_format": ZARR_FORMAT,
-            "shape": list(a.shape),
-            "chunks": list(chunks),
-            "dtype": a.dtype.str,
-            "compressor": _compressor_doc(compressor),
-            "fill_value": 0,
-            "order": "C",
-            "filters": None,
-        }
-        _write_json(os.path.join(path, ".zarray"), meta)
-        if attrs is not None:
-            _write_json(os.path.join(path, ".zattrs"), attrs)
-
-        def keyfn(nums):
-            return ".".join(str(k) for k in nums) or "0"
-
+    eff, keyfn = _write_array_doc(path, a.dtype, a.shape, chunks, compressor, attrs, zarr_format)
     grid = [range(-(-s // c)) for s, c in zip(a.shape, chunks)]
     idx: list[tuple[int, ...]] = [()]
     for g in grid:
@@ -287,11 +312,7 @@ def zarr_write_array(
         block = a[sl]
         full = np.zeros(chunks, dtype=a.dtype)
         full[tuple(slice(0, b) for b in block.shape)] = block
-        name = keyfn(key)
-        fpath = os.path.join(path, *name.split("/"))
-        os.makedirs(os.path.dirname(fpath), exist_ok=True)
-        with open(fpath, "wb") as f:
-            f.write(_compress(eff, full.tobytes(), typesize=a.dtype.itemsize))
+        _write_chunk_file(path, keyfn(key), _compress(eff, full.tobytes(), typesize=a.dtype.itemsize))
 
 
 def zarr_read_array(path: str) -> np.ndarray:
@@ -350,6 +371,73 @@ def zarr_read_array(path: str) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
+def _level_shape(
+    meta: RasterMeta, scale: int, squeeze_channel: bool, is_3d: bool
+) -> tuple[list[int], list[int]]:
+    """Array and chunk shape of one pyramid level: ``(c, [z,] y, x)``
+    with ``(1, [1,] tile, tile)`` chunks, without the channel axis when
+    ``squeeze_channel``."""
+    if squeeze_channel and meta.n_channels != 1:
+        raise ValueError("squeeze_channel requires a single-channel raster")
+    h, w = meta.shape_at(scale)
+    shape, chunks = [h, w], [meta.tile, meta.tile]
+    if is_3d:
+        shape, chunks = [meta.depth] + shape, [1] + chunks
+    if not squeeze_channel:
+        shape, chunks = [meta.n_channels] + shape, [1] + chunks
+    return shape, chunks
+
+
+def _write_level(
+    src: DataFrame,
+    meta: RasterMeta,
+    path: str,
+    scale: int,
+    compressor: str | None,
+    attrs: dict | None,
+    squeeze_channel: bool,
+    zarr_format: int,
+    is_3d: bool,
+) -> int:
+    """Write one pyramid level: the array document first, then one
+    Arrow pass on the executors that encodes and writes every chunk
+    file.  ``src`` holds either tile rows ``(c, [z,] ty, tx, tile)`` of
+    this level, or long-form pixels keyed by
+    :func:`~spatialdata_spark.operators.raster.tile_keyed` (or
+    ``tile3d_keyed``), which the same grouped pass packs into dense
+    tiles first.  Returns the chunk count."""
+    import pandas as pd
+
+    shape, chunks = _level_shape(meta, scale, squeeze_channel, is_3d)
+    dtype = np.dtype(meta.dtype)
+    codec, keyfn = _write_array_doc(path, dtype, shape, chunks, compressor, attrs, zarr_format)
+    keys = ["c", "z", "ty", "tx"] if is_3d else ["c", "ty", "tx"]
+    skip = 1 if squeeze_channel else 0  # chunk keys drop a squeezed channel
+    ts, itemsize = meta.tile, dtype.itemsize
+
+    def write(key, raw: bytes) -> None:
+        name = keyfn(tuple(int(k) for k in key[skip:]))
+        _write_chunk_file(path, name, _compress(codec, raw, typesize=itemsize))
+
+    if "tile" in src.columns:
+
+        def write_tiles(batches):
+            for pdf in batches:
+                for row in pdf.itertuples(index=False):
+                    write(row[:-1], bytes(row[-1]))
+                yield pd.DataFrame({"n": [len(pdf)]})
+
+        done = src.select(*keys, "tile").mapInPandas(write_tiles, "n long")
+    else:
+
+        def pack_and_write(key, pdf):
+            write(key, pack_tile(pdf, ts, meta.dtype).tobytes())
+            return pd.DataFrame({"n": [1]})
+
+        done = src.groupBy(*keys).applyInPandas(pack_and_write, "n long")
+    return sum(r.n for r in done.collect())
+
+
 def write_tiles_to_zarr(
     tiles: DataFrame,
     meta: RasterMeta,
@@ -367,9 +455,13 @@ def write_tiles_to_zarr(
     ``(y, x)`` array with 2-part chunk keys so the axes count matches
     the NGFF multiscales metadata external readers validate.
 
-    The executors each encode and write their own chunk files (the
-    tile grid maps 1:1 onto the zarr chunk grid, so no shuffle); the
-    driver writes only the JSON metadata.  Returns the chunk count.
+    The array document is written first, then one Arrow pass
+    (``mapInPandas``, one Spark job) encodes and writes every chunk file
+    on the executors: the tile grid maps 1:1 onto the zarr chunk grid,
+    so no shuffle.  Returns the chunk count.  A bad ``squeeze_channel``
+    or ``shard`` argument raises ``ValueError`` before anything is
+    written; a failing chunk write fails the job, and the chunks
+    written by then stay on disk.
 
     ``shard=m`` (v3 only) writes ``sharding_indexed`` shards of
     ``m x m`` tiles instead of one object per tile — the store-object
@@ -377,70 +469,14 @@ def write_tiles_to_zarr(
     regroup shuffle keyed by shard coordinates; each task assembles
     and writes exactly one shard (crc32c-checksummed index).
     """
-    h, w = meta.shape_at(scale)
-    ts = meta.tile
-    dtype = np.dtype(meta.dtype)
-    if squeeze_channel and meta.n_channels != 1:
-        raise ValueError("squeeze_channel requires a single-channel raster")
-    shape2 = [h, w] if squeeze_channel else [meta.n_channels, h, w]
-    chunks2 = [ts, ts] if squeeze_channel else [1, ts, ts]
     if shard is not None:
-        if zarr_format != 3:
-            raise ValueError("sharded writes need zarr_format=3")
         return _write_tiles_sharded(
-            tiles, meta, path, scale, compressor, attrs, squeeze_channel,
-            int(shard), shape2, chunks2,
+            tiles, meta, path, scale, compressor, attrs, squeeze_channel, int(shard), zarr_format
         )
-    if zarr_format == 3:
-        from spatialdata_spark.sources import zarr3
-
-        codec = "gzip" if compressor == "zlib" else compressor
-        meta3 = zarr3.array_meta(tuple(shape2), tuple(chunks2), dtype, codec, attrs)
-        _write_json(os.path.join(path, "zarr.json"), meta3)
-        keyfn = zarr3.parse_array_meta(meta3)["key"]
-    else:
-        codec = compressor
-        arr_meta = {
-            "zarr_format": ZARR_FORMAT,
-            "shape": shape2,
-            "chunks": chunks2,
-            "dtype": dtype.str,
-            "compressor": _compressor_doc(compressor),
-            "fill_value": 0,
-            "order": "C",
-            "filters": None,
-        }
-        _write_json(os.path.join(path, ".zarray"), arr_meta)
-        if attrs is not None:
-            _write_json(os.path.join(path, ".zattrs"), attrs)
-
-        def keyfn(nums):
-            return ".".join(str(k) for k in nums)
-
-    itemsize = dtype.itemsize
-
-    def _write_part(rows):
-        n = 0
-        for row in rows:
-            buf = _compress(codec, bytes(row.tile), typesize=itemsize)
-            if squeeze_channel:
-                name = keyfn((int(row.ty), int(row.tx)))
-            else:
-                name = keyfn((int(row.c), int(row.ty), int(row.tx)))
-            fpath = os.path.join(path, *name.split("/"))
-            os.makedirs(os.path.dirname(fpath), exist_ok=True)
-            with open(fpath, "wb") as f:
-                f.write(buf)
-            n += 1
-        yield n
-
-    counts = (
-        tiles.filter(F.col("scale") == scale)
-        .select("c", "ty", "tx", "tile")
-        .rdd.mapPartitions(_write_part)
-        .collect()
+    return _write_level(
+        tiles.filter(F.col("scale") == scale), meta, path, scale, compressor, attrs,
+        squeeze_channel, zarr_format, is_3d=False,
     )
-    return int(sum(counts))
 
 
 def _write_tiles_sharded(
@@ -452,8 +488,7 @@ def _write_tiles_sharded(
     attrs: dict | None,
     squeeze_channel: bool,
     shard: int,
-    shape2: list[int],
-    chunks2: list[int],
+    zarr_format: int,
 ) -> int:
     """Sharded v3 write: tiles regroup once on shard coordinates and
     each group task assembles one ``sharding_indexed`` shard (C-order
@@ -463,6 +498,9 @@ def _write_tiles_sharded(
 
     from spatialdata_spark.sources import zarr3
 
+    shape2, chunks2 = _level_shape(meta, scale, squeeze_channel, is_3d=False)
+    if zarr_format != 3:
+        raise ValueError("sharded writes need zarr_format=3")
     ts = meta.tile
     dtype = np.dtype(meta.dtype)
     codec = "gzip" if compressor == "zlib" else compressor
@@ -491,11 +529,7 @@ def _write_tiles_sharded(
                 payloads.append(
                     None if raw is None else _compress(codec, raw, typesize=itemsize)
                 )
-        name = keyfn((sy, sx) if sq else (c, sy, sx))
-        fpath = os.path.join(path, *name.split("/"))
-        os.makedirs(os.path.dirname(fpath), exist_ok=True)
-        with open(fpath, "wb") as f:
-            f.write(zarr3.build_shard(payloads))
+        _write_chunk_file(path, keyfn((sy, sx) if sq else (c, sy, sx)), zarr3.build_shard(payloads))
         return pd.DataFrame({"n": [len(by_pos)]})
 
     counts = (
@@ -836,6 +870,9 @@ def read_consolidated_doc(path: str) -> dict | None:
 # ---------------------------------------------------------------------------
 
 
+_LEAF = {"points": "points.parquet", "shapes": "shapes.parquet", "tables": "table.parquet"}
+
+
 def write_zarr_store(
     ds,
     path: str,
@@ -850,103 +887,137 @@ def write_zarr_store(
     ``points/<name>/points.parquet``; ``shapes/<name>/shapes.parquet``;
     ``tables/<name>/table.parquet``; ``images|labels/<name>/<level>``
     NGFF multiscale zarr arrays with multiscales metadata.  Raster
-    elements (long form) need a :class:`RasterMeta` in ``raster_meta``.
+    elements need a :class:`RasterMeta` in ``raster_meta``.
+
+    Every element is written at once: each element's write (its parquet
+    leaf or raster arrays, then its group attrs) runs on a pool of
+    ``min(#elements, defaultParallelism)`` threads that carry the
+    caller's job tags and job group, so their Spark jobs run side by
+    side like dask's parallel chunk writes.  A long-form raster level
+    is one grouped Arrow pass that packs, compresses and writes each
+    tile's chunk file (see :func:`write_tiles_to_zarr`).  The kind
+    groups and the consolidated metadata are written after every
+    element has finished.
+
+    Errors: a bad ``zarr_format`` or a raster without a ``RasterMeta``
+    raises ``ValueError`` before anything is written.  If an element
+    write fails, the elements not yet started are skipped, the ones
+    already running finish, and the first failure in element order is
+    raised; the store is left without kind groups or ``.zmetadata``.
     """
     raster_meta = raster_meta or {}
     if zarr_format not in (2, 3):
         raise ValueError(f"unsupported zarr_format {zarr_format}")
+    for kind in ("images", "labels"):
+        for name in ds.elements[kind]:
+            if raster_meta.get(name) is None:
+                raise ValueError(f"writing raster {name!r} to zarr needs a RasterMeta in raster_meta")
     # container version pairs with the zarr metadata version, mirroring
     # the reference's format matrix (V01 <-> zarr v2, V02 <-> zarr v3;
     # _io/format.py:56-267)
     version = "0.2" if zarr_format == 3 else _SDATA_VERSION
     write_group(path, {"spatialdata_attrs": {"version": version}}, zarr_format)
-    for kind in ("points", "shapes", "tables"):
-        for name, df in ds.elements[kind].items():
-            gpath = os.path.join(path, kind, name)
-            leaf = {"points": "points.parquet", "shapes": "shapes.parquet", "tables": "table.parquet"}[kind]
-            df.write.mode("overwrite").parquet(os.path.join(gpath, leaf))
-            axes = ("x", "y", "z") if "z" in df.columns else ("x", "y")
-            attrs: dict = {
-                "spatialdata_attrs": {"version": version},
-                "coordinateTransformations": _transforms_attr(ds.transforms.get(name, {}), axes),
-            }
-            if kind == "tables" and name in ds.table_meta:
-                tm = ds.table_meta[name]
-                attrs["spatialdata_attrs"].update(
-                    {"region": tm.region, "region_key": tm.region_key, "instance_key": tm.instance_key}
-                )
-            write_group(gpath, attrs, zarr_format)
-        if ds.elements[kind]:
-            write_group(os.path.join(path, kind), zarr_format=zarr_format)
-    for kind in ("images", "labels"):
-        for name, df in ds.elements[kind].items():
-            meta = raster_meta.get(name)
-            if meta is None:
-                raise ValueError(f"writing raster {name!r} to zarr needs a RasterMeta in raster_meta")
-            gpath = os.path.join(path, kind, name)
-            is_3d = meta.depth > 1 or "z" in df.columns
-            if is_3d:
-                # Labels3DModel (z,y,x) / Image3DModel (c,z,y,x) — z-plane
-                # chunks (reference models/models.py:428,447)
-                axes = ("c", "z", "y", "x") if kind == "images" else ("z", "y", "x")
-            else:
-                axes = ("c", "y", "x") if kind == "images" else ("y", "x")
-            scales = sorted(
-                r["scale"] for r in df.select("scale").distinct().collect()
-            ) if "scale" in df.columns else [0]
-            if "scale" in df.columns and "tile" in df.columns:
-                tiles = df
-            else:
-                long_df = df.withColumnRenamed("label", "value") if "label" in df.columns else df
-                if is_3d:
-                    from spatialdata_spark.operators.raster import long3d_to_tiles
 
-                    tiles = long3d_to_tiles(long_df, meta)
-                else:
-                    tiles = long_to_tiles(long_df, meta)
-            datasets = []
-            for s in scales:
-                lvl_path = os.path.join(gpath, str(s))
-                # labels are written without the channel axis so the
-                # array ndim matches the multiscales axes count (NGFF
-                # conformance)
-                if is_3d:
-                    write_tiles3d_to_zarr(
-                        tiles, meta, lvl_path, scale=int(s), compressor=compressor,
-                        squeeze_channel=(kind == "labels"), zarr_format=zarr_format,
-                    )
-                else:
-                    write_tiles_to_zarr(
-                        tiles, meta, lvl_path, scale=int(s), compressor=compressor,
-                        squeeze_channel=(kind == "labels"), zarr_format=zarr_format,
-                    )
-                datasets.append(
-                    {
-                        "path": str(s),
-                        "coordinateTransformations": [
-                            {"type": "scale", "scale": [1.0] * (len(axes) - 2) + [float(meta.scale_factor**s)] * 2}
-                        ],
-                    }
-                )
-            attrs = {
-                "multiscales": [
-                    {
-                        "version": "0.4",
-                        "axes": [
-                            {"name": ax, "type": "channel" if ax == "c" else "space"} for ax in axes
-                        ],
-                        "datasets": datasets,
-                        "coordinateTransformations": _transforms_attr(
-                            ds.transforms.get(name, {}), axes
-                        ),
-                    }
-                ],
-                "spatialdata_attrs": {"version": version},
-            }
-            write_group(gpath, attrs, zarr_format)
+    def write_table(kind: str, name: str, df: DataFrame) -> None:
+        gpath = os.path.join(path, kind, name)
+        df.write.mode("overwrite").parquet(os.path.join(gpath, _LEAF[kind]))
+        axes = ("x", "y", "z") if "z" in df.columns else ("x", "y")
+        attrs: dict = {
+            "spatialdata_attrs": {"version": version},
+            "coordinateTransformations": _transforms_attr(ds.transforms.get(name, {}), axes),
+        }
+        if kind == "tables" and name in ds.table_meta:
+            tm = ds.table_meta[name]
+            attrs["spatialdata_attrs"].update(
+                {"region": tm.region, "region_key": tm.region_key, "instance_key": tm.instance_key}
+            )
+        write_group(gpath, attrs, zarr_format)
+
+    def write_raster(kind: str, name: str, df: DataFrame) -> None:
+        meta = raster_meta[name]
+        gpath = os.path.join(path, kind, name)
+        is_3d = meta.depth > 1 or "z" in df.columns
+        if is_3d:
+            # Labels3DModel (z,y,x) / Image3DModel (c,z,y,x) — z-plane
+            # chunks (reference models/models.py:428,447)
+            axes = ("c", "z", "y", "x") if kind == "images" else ("z", "y", "x")
+        else:
+            axes = ("c", "y", "x") if kind == "images" else ("y", "x")
+        if "scale" in df.columns and "tile" in df.columns:
+            scales = sorted(r["scale"] for r in df.select("scale").distinct().collect())
+            levels = [(s, df.filter(F.col("scale") == s)) for s in scales]
+        else:
+            # long form is one level: pixels keyed by tile, packed and
+            # written in the level's grouped pass
+            keyed = (tile3d_keyed if is_3d else tile_keyed)(
+                df, meta.tile, "label" if "label" in df.columns else "value"
+            )
+            levels = [(0, keyed)]
+        datasets = []
+        for s, src in levels:
+            # labels are written without the channel axis so the
+            # array ndim matches the multiscales axes count (NGFF
+            # conformance)
+            _write_level(
+                src, meta, os.path.join(gpath, str(s)), int(s), compressor, None,
+                kind == "labels", zarr_format, is_3d,
+            )
+            datasets.append(
+                {
+                    "path": str(s),
+                    "coordinateTransformations": [
+                        {"type": "scale", "scale": [1.0] * (len(axes) - 2) + [float(meta.scale_factor**s)] * 2}
+                    ],
+                }
+            )
+        attrs = {
+            "multiscales": [
+                {
+                    "version": "0.4",
+                    "axes": [
+                        {"name": ax, "type": "channel" if ax == "c" else "space"} for ax in axes
+                    ],
+                    "datasets": datasets,
+                    "coordinateTransformations": _transforms_attr(
+                        ds.transforms.get(name, {}), axes
+                    ),
+                }
+            ],
+            "spatialdata_attrs": {"version": version},
+        }
+        write_group(gpath, attrs, zarr_format)
+
+    kinds = ("points", "shapes", "tables", "images", "labels")
+    tasks = [
+        functools.partial(write_table if kind in _LEAF else write_raster, kind, name, df)
+        for kind in kinds
+        for name, df in ds.elements[kind].items()
+    ]
+    _run_all(ds.spark, tasks)
+    for kind in kinds:
         if ds.elements[kind]:
             write_group(os.path.join(path, kind), zarr_format=zarr_format)
     consolidate_metadata(path)
+
+
+def _run_all(spark: SparkSession | None, tasks: list) -> None:
+    """Run ``tasks`` on ``min(len(tasks), defaultParallelism)`` threads.
+    Each task inherits the caller's job tags and local properties (job
+    group, description).  After a failure, tasks not yet started are
+    cancelled; once the running ones finish, the first failure in task
+    order is raised."""
+    if not tasks:
+        return
+    spark = spark or SparkSession.active()
+    workers = min(len(tasks), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(task)) for task in tasks]
+        wait(futures, return_when=FIRST_EXCEPTION)
+        for f in futures:
+            f.cancel()  # a no-op on tasks already started
+    for f in futures:
+        if not f.cancelled():
+            f.result()
 
 
 def read_zarr_store(
@@ -1014,8 +1085,7 @@ def read_zarr_store(
             try:
                 attrs = _attrs(rel_group)
                 if kind in ("points", "shapes", "tables"):
-                    leaf = {"points": "points.parquet", "shapes": "shapes.parquet", "tables": "table.parquet"}[kind]
-                    rel_leaf = f"{rel_group}/{leaf}"
+                    rel_leaf = f"{rel_group}/{_LEAF[kind]}"
                     part_files = None
                     if manifest is not None:
                         pre = rel_leaf + "/"
@@ -1097,69 +1167,15 @@ def write_tiles3d_to_zarr(
     chunks ``(1, 1, tile, tile)`` — or, with ``squeeze_channel=True``
     (labels), a 3-d ``(z, y, x)`` array with 3-part chunk keys, matching
     the reference's Labels3DModel store layout (models/models.py:428,
-    _io/io_raster.py).  Executors write their own chunks; the driver
-    writes only metadata."""
-    h, w = meta.shape_at(scale)
-    ts = meta.tile
-    dtype = np.dtype(meta.dtype)
-    if squeeze_channel and meta.n_channels != 1:
-        raise ValueError("squeeze_channel requires a single-channel raster")
-    shape = [h, w]
-    chunks = [ts, ts]
-    shape = ([meta.depth] + shape) if squeeze_channel else [meta.n_channels, meta.depth] + shape
-    chunks = ([1] + chunks) if squeeze_channel else [1, 1] + chunks
-    if zarr_format == 3:
-        from spatialdata_spark.sources import zarr3
-
-        codec = "gzip" if compressor == "zlib" else compressor
-        meta3 = zarr3.array_meta(tuple(shape), tuple(chunks), dtype, codec, attrs)
-        _write_json(os.path.join(path, "zarr.json"), meta3)
-        keyfn = zarr3.parse_array_meta(meta3)["key"]
-    else:
-        codec = compressor
-        _write_json(
-            os.path.join(path, ".zarray"),
-            {
-                "zarr_format": ZARR_FORMAT,
-                "shape": shape,
-                "chunks": chunks,
-                "dtype": dtype.str,
-                "compressor": _compressor_doc(compressor),
-                "fill_value": 0,
-                "order": "C",
-                "filters": None,
-            },
-        )
-        if attrs is not None:
-            _write_json(os.path.join(path, ".zattrs"), attrs)
-
-        def keyfn(nums):
-            return ".".join(str(k) for k in nums)
-
-    itemsize = dtype.itemsize
-
-    def _write_part(rows):
-        n = 0
-        for row in rows:
-            buf = _compress(codec, bytes(row.tile), typesize=itemsize)
-            nums = (int(row.z), int(row.ty), int(row.tx))
-            if not squeeze_channel:
-                nums = (int(row.c),) + nums
-            name = keyfn(nums)
-            fpath = os.path.join(path, *name.split("/"))
-            os.makedirs(os.path.dirname(fpath), exist_ok=True)
-            with open(fpath, "wb") as f:
-                f.write(buf)
-            n += 1
-        yield n
-
-    counts = (
-        tiles.filter(F.col("scale") == scale)
-        .select("c", "z", "ty", "tx", "tile")
-        .rdd.mapPartitions(_write_part)
-        .collect()
+    _io/io_raster.py).  Same write as :func:`write_tiles_to_zarr`: the
+    array document first, then one Arrow pass that encodes and writes
+    every chunk file on the executors; a bad ``squeeze_channel``
+    raises ``ValueError`` before anything is written.  Returns the
+    chunk count."""
+    return _write_level(
+        tiles.filter(F.col("scale") == scale), meta, path, scale, compressor, attrs,
+        squeeze_channel, zarr_format, is_3d=True,
     )
-    return int(sum(counts))
 
 
 def read_zarr_tiles_3d(spark: SparkSession, path: str, scale: int = 0):

@@ -64,7 +64,9 @@ PINNED = {
     "spatialdata_spark/pipeline/graph.py": (2, 0, 0, 0, 0),
     "spatialdata_spark/pipeline/similarity.py": (2, 0, 3, 0, 0),
     "spatialdata_spark/pipeline/textstats.py": (0, 0, 1, 0, 0),
-    "spatialdata_spark/sources/zarrio.py": (4, 0, 0, 0, 0),
+    # one shared chunk writer: the 2-D and 3-D level writes share one
+    # chunk-count collect
+    "spatialdata_spark/sources/zarrio.py": (3, 0, 0, 0, 0),
     "spatialdata_spark/streaming/windows.py": (1, 0, 0, 0, 0),
     "spatialdata_spark/transformations/landmarks.py": (1, 0, 0, 0, 0),
 }

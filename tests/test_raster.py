@@ -295,3 +295,35 @@ def test_zonal_quantiles_long(spark):
     assert abs(r["q25"] - 1.75) < 1e-12
     assert abs(r["q50"] - 6.0) < 1e-12
     assert abs(r["q75"] - 10.25) < 1e-12
+
+
+# the pyspark release whose private calls _map_in_pandas_cached and
+# _apply_in_pandas_cached were checked against
+PYSPARK_CHECKED = "4.1.2"
+
+
+def test_private_pyspark_calls_are_pinned():
+    """``_map_in_pandas_cached`` calls ``df._jdf.mapInPandas(jc, False,
+    None)`` and ``_apply_in_pandas_cached`` calls
+    ``grouped._jgd.flatMapGroupsInPandas(jc)``: private signatures that
+    have drifted between pyspark releases before.  Both mirror the
+    public mixin bodies, so an upgrade must re-check them."""
+    import inspect
+
+    import pyspark
+    from pyspark.sql.pandas.group_ops import PandasGroupedOpsMixin
+    from pyspark.sql.pandas.map_ops import PandasMapOpsMixin
+
+    assert pyspark.__version__ == PYSPARK_CHECKED, (
+        f"pyspark {pyspark.__version__} is installed, but the private calls in "
+        "spatialdata_spark/operators/raster.py (_jdf.mapInPandas(jc, False, None) and "
+        f"_jgd.flatMapGroupsInPandas(jc)) were checked on pyspark {PYSPARK_CHECKED}: "
+        "compare them with PandasMapOpsMixin.mapInPandas and "
+        "PandasGroupedOpsMixin.applyInPandas of the new release, then update PYSPARK_CHECKED"
+    )
+    assert "self._jdf.mapInPandas(udf_column._jc, barrier, jrp)" in inspect.getsource(
+        PandasMapOpsMixin.mapInPandas
+    )
+    assert "self._jgd.flatMapGroupsInPandas(udf_column._jc)" in inspect.getsource(
+        PandasGroupedOpsMixin.applyInPandas
+    )

@@ -310,3 +310,274 @@ def test_labels_written_2d_ngff_conformant(spark, tmp_path):
     back = read_zarr_store(spark, p)
     got = {(r["y"], r["x"]): r["label"] for r in back.labels["cells"].collect()}
     assert got == {(y, x): (y + x) % 4 + 1 for y in range(20) for x in range(20)}
+
+
+# ---------------------------------------------------------------------------
+# chunk bytes, fail-fast, job groups and concurrent writes
+# ---------------------------------------------------------------------------
+
+IMG_C, IMG_H, IMG_W, IMG_TS = 2, 37, 50, 16
+VOL_Z, VOL_H, VOL_W, VOL_TS = 3, 20, 20, 8
+
+
+@pytest.fixture(scope="module")
+def rasters():
+    """Dense numpy oracles with some tiles left empty: a 2-channel image
+    ``(c, y, x)``, 2-D labels ``(y, x)`` and 3-D labels ``(z, y, x)``."""
+    rng = np.random.default_rng(5)
+    img = np.zeros((IMG_C, IMG_H, IMG_W))
+    for c in range(IMG_C):
+        yy, xx = rng.integers(0, IMG_H, 150), rng.integers(0, IMG_W, 150)
+        img[c, yy, xx] = rng.integers(1, 100, 150) + 0.5
+    img[0, 16:32, 32:48] = 0  # tile (0, 1, 2) stays empty
+    img[1, :16, :] = 0  # channel 1 has no tile in row 0
+    lab = np.zeros((IMG_H, IMG_W), dtype=np.int64)
+    yy, xx = rng.integers(0, IMG_H, 200), rng.integers(0, IMG_W, 200)
+    lab[yy, xx] = rng.integers(1, 9, 200)
+    lab[:, 16:32] = 0  # tile column 1 stays empty
+    vol = np.zeros((VOL_Z, VOL_H, VOL_W), dtype=np.int64)
+    zz, yy, xx = rng.integers(0, VOL_Z, 60), rng.integers(0, VOL_H, 60), rng.integers(0, VOL_W, 60)
+    vol[zz, yy, xx] = rng.integers(1, 5, 60)
+    vol[1] = 0  # plane 1 stays empty
+    return {"image": img, "cells": lab, "vol": vol}
+
+
+def _long_rows(a: np.ndarray) -> list[tuple]:
+    return [tuple(int(i) for i in idx) + (a[idx].item(),) for idx in zip(*np.nonzero(a))]
+
+
+def _raster_ds(spark, rasters, image_tiles: bool = False):
+    from spatialdata_spark.catalog import SpatialDataset
+    from spatialdata_spark.operators.raster import long_to_tiles
+
+    image = spark.createDataFrame(_long_rows(rasters["image"]), "c int, y long, x long, value double")
+    if image_tiles:
+        image = long_to_tiles(image, _raster_meta()["image"])
+    ds = SpatialDataset(spark)
+    ds.add_images("image", image)
+    ds.add_labels("cells", spark.createDataFrame(_long_rows(rasters["cells"]), "y long, x long, label long"))
+    ds.add_labels("vol", spark.createDataFrame(_long_rows(rasters["vol"]), "z long, y long, x long, label long"))
+    return ds
+
+
+def _raster_meta():
+    from spatialdata_spark.operators.raster import RasterMeta
+
+    return {
+        "image": RasterMeta(height=IMG_H, width=IMG_W, tile=IMG_TS, dtype="f8", n_channels=IMG_C),
+        "cells": RasterMeta(height=IMG_H, width=IMG_W, tile=IMG_TS, dtype="i8"),
+        "vol": RasterMeta(height=VOL_H, width=VOL_W, tile=VOL_TS, dtype="i8", depth=VOL_Z),
+    }
+
+
+def _expected_chunks(a: np.ndarray, ts: int) -> dict[tuple[int, ...], bytes]:
+    """Dense zero-padded tile bytes of every non-empty tile of ``a``,
+    keyed by the chunk grid index (leading axes are one chunk each)."""
+    out = {}
+    *lead, h, w = a.shape
+    for idx in np.ndindex(*lead):
+        for ty in range(-(-h // ts)):
+            for tx in range(-(-w // ts)):
+                block = a[idx][ty * ts:(ty + 1) * ts, tx * ts:(tx + 1) * ts]
+                if not block.any():
+                    continue
+                dense = np.zeros((ts, ts), dtype=a.dtype)
+                dense[: block.shape[0], : block.shape[1]] = block
+                out[idx + (ty, tx)] = dense.tobytes()
+    return out
+
+
+def _same_chunk(got: bytes, want: bytes, codec: str | None) -> bool:
+    if codec == "gzip":
+        # bytes 4-8 of a gzip member hold its mtime, the time of writing
+        return got[:4] == want[:4] and got[8:] == want[8:]
+    return got == want
+
+
+@pytest.mark.parametrize("zarr_format", [2, 3])
+@pytest.mark.parametrize("codec", [None, "zlib", "blosc"])
+def test_store_chunk_bytes_match_numpy(spark, tmp_path, rasters, zarr_format, codec):
+    """Every chunk file of an image ``(c, y, x)``, 2-D labels and 3-D
+    labels equals the codec applied to the dense tile built in plain
+    numpy; the chunk keys are exactly the non-empty tiles; long-form
+    and tile-form input of the same raster write identical arrays."""
+    from spatialdata_spark.operators.raster import long3d_to_tiles, long_to_tiles
+    from spatialdata_spark.sources.zarrio import _compress, write_tiles3d_to_zarr
+
+    metas = _raster_meta()
+    p = str(tmp_path / "store.zarr")
+    write_zarr_store(_raster_ds(spark, rasters), p, raster_meta=metas, compressor=codec, zarr_format=zarr_format)
+    eff = "gzip" if (zarr_format == 3 and codec == "zlib") else codec
+    doc_names = {".zarray", ".zattrs", "zarr.json"}
+    for kind, name in [("images", "image"), ("labels", "cells"), ("labels", "vol")]:
+        level = os.path.join(p, kind, name, "0")
+        want = _expected_chunks(rasters[name], metas[name].tile)
+        got = {}
+        for root, _dirs, files in os.walk(level):
+            for fn in files:
+                rel = os.path.relpath(os.path.join(root, fn), level).replace(os.sep, "/")
+                if rel in doc_names:
+                    continue
+                nums = rel.split("/")[1:] if zarr_format == 3 else rel.split(".")
+                if zarr_format == 3:
+                    assert rel.startswith("c/"), rel
+                got[tuple(int(n) for n in nums)] = open(os.path.join(root, fn), "rb").read()
+        assert set(got) == set(want), (name, sorted(set(got) ^ set(want)))
+        for key, dense in want.items():
+            assert _same_chunk(got[key], _compress(eff, dense, typesize=8), eff), (name, key)
+
+    # tile-form input: the same image group, byte for byte
+    p2 = str(tmp_path / "tiles.zarr")
+    write_zarr_store(
+        _raster_ds(spark, rasters, image_tiles=True), p2, raster_meta=metas, compressor=codec,
+        zarr_format=zarr_format,
+    )
+    _assert_same_files(os.path.join(p, "images", "image"), os.path.join(p2, "images", "image"), eff)
+    # ... and the same labels levels from the tile writers
+    ds = _raster_ds(spark, rasters)
+    for name, pack, writer in [
+        ("cells", long_to_tiles, write_tiles_to_zarr),
+        ("vol", long3d_to_tiles, write_tiles3d_to_zarr),
+    ]:
+        tiles = pack(ds[name].withColumnRenamed("label", "value"), metas[name])
+        out = str(tmp_path / f"{name}_tiles")
+        writer(tiles, metas[name], out, compressor=codec, squeeze_channel=True, zarr_format=zarr_format)
+        _assert_same_files(os.path.join(p, "labels", name, "0"), out, eff)
+
+
+def _store_files(root: str) -> dict[str, str]:
+    """Relative path -> absolute path of every file in a store, with the
+    per-write uuid of parquet part files masked."""
+    import re
+
+    out = {}
+    for d, _dirs, files in os.walk(root):
+        for fn in files:
+            rel = os.path.relpath(os.path.join(d, fn), root).replace(os.sep, "/")
+            out[re.sub(r"part-(\d+)-[0-9a-f-]{36}", r"part-\1-UUID", rel)] = os.path.join(d, fn)
+    return out
+
+
+def _assert_same_files(a: str, b: str, codec: str | None = None) -> None:
+    """Same file list, the same bytes for chunks and JSON documents
+    (parquet part names masked in ``.zmetadata``), the same rows in
+    every parquet leaf."""
+    import re
+
+    import pandas as pd
+
+    fa, fb = _store_files(a), _store_files(b)
+    assert sorted(fa) == sorted(fb)
+    leaves = set()
+    for rel in fa:
+        if ".parquet/" in rel:
+            leaves.add(rel.split(".parquet/")[0] + ".parquet")
+            continue
+        x, y = open(fa[rel], "rb").read(), open(fb[rel], "rb").read()
+        if rel.endswith(".zmetadata"):
+            x, y = (re.sub(rb"part-(\d+)-[0-9a-f-]{36}", rb"part-\1-UUID", v) for v in (x, y))
+        is_doc = rel.rsplit("/", 1)[-1] in (".zarray", ".zattrs", ".zgroup", ".zmetadata", "zarr.json")
+        assert _same_chunk(x, y, None if is_doc else codec), rel
+    for leaf in sorted(leaves):
+        ra, rb = (pd.read_parquet(os.path.join(root, leaf)) for root in (a, b))
+        cols = list(ra.columns)
+        pd.testing.assert_frame_equal(
+            ra.sort_values(cols).reset_index(drop=True), rb.sort_values(cols).reset_index(drop=True)
+        )
+
+
+def test_missing_raster_meta_fails_before_any_write(spark, tmp_path, rasters):
+    """A raster without a RasterMeta raises before any element — the
+    points leaf included — is written."""
+    ds = _raster_ds(spark, rasters)
+    ds.add_points("pts", spark.createDataFrame([(1, 2.0, 3.0)], "id long, x double, y double"))
+    p = tmp_path / "store.zarr"
+    metas = _raster_meta()
+    del metas["vol"]
+    with pytest.raises(ValueError, match="'vol'.*RasterMeta"):
+        write_zarr_store(ds, str(p), raster_meta=metas)
+    assert not p.exists()
+
+
+def test_element_write_failure_is_raised_after_the_pool(spark, tmp_path, rasters):
+    """An element that fails inside the pool raises to the caller; the
+    store gets no kind groups and no consolidated metadata."""
+    from spatialdata_spark.operators.raster import RasterMeta
+
+    ds = _raster_ds(spark, rasters)
+    ds.add_points("pts", spark.createDataFrame([(1, 2.0, 3.0)], "id long, x double, y double"))
+    metas = _raster_meta()
+    metas["cells"] = RasterMeta(height=IMG_H, width=IMG_W, tile=IMG_TS, dtype="i8", n_channels=2)
+    p = tmp_path / "store.zarr"
+    with pytest.raises(ValueError, match="single-channel"):
+        write_zarr_store(ds, str(p), raster_meta=metas)
+    assert (p / ".zgroup").exists()
+    assert not (p / ".zmetadata").exists() and not (p / "labels" / ".zgroup").exists()
+
+
+def test_store_write_jobs_keep_the_callers_job_group(spark, tmp_path, rasters):
+    """Every job the element pool launches runs in the caller's job
+    group: none is left without one."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker(group: str) -> list[int]:
+        sc.setJobGroup(group, "marker")
+        spark.range(1).count()
+        return tracker.getJobIdsForGroup(group)
+
+    ds = _raster_ds(spark, rasters)
+    ds.add_points("pts", spark.createDataFrame([(1, 2.0, 3.0)], "id long, x double, y double"))
+    try:
+        first = max(marker("zarr-test-before"))
+        sc.setJobGroup("zarr-test-write", "store write")
+        write_zarr_store(ds, str(tmp_path / "store.zarr"), raster_meta=_raster_meta())
+        last = min(marker("zarr-test-after"))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    during = set(range(first + 1, last))
+    assert len(during) >= 4  # a parquet leaf and three raster levels
+    assert during <= set(tracker.getJobIdsForGroup("zarr-test-write"))
+    assert not during & set(tracker.getJobIdsForGroup(None))
+
+
+def test_concurrent_store_writes_match_sequential(spark, tmp_path, rasters):
+    """Two write_zarr_store calls from two threads write the same stores
+    as the same calls one after the other."""
+    import threading
+
+    def ds_for(i: int):
+        ds = _raster_ds(spark, rasters)
+        pts = spark.createDataFrame(
+            [(j, float(j * i), float(j + i)) for j in range(50)], "id long, x double, y double"
+        )
+        return ds.add_points("pts", pts)
+
+    import sys
+
+    metas = _raster_meta()
+    for i in (1, 2):
+        write_zarr_store(ds_for(i), str(tmp_path / f"seq{i}.zarr"), raster_meta=metas)
+    errors = []
+
+    def run(i: int) -> None:
+        try:
+            write_zarr_store(ds_for(i), str(tmp_path / f"par{i}.zarr"), raster_meta=metas)
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(i,)) for i in (1, 2)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the writer threads finely
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    for i in (1, 2):
+        _assert_same_files(str(tmp_path / f"seq{i}.zarr"), str(tmp_path / f"par{i}.zarr"), "zlib")
