@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from spatialdata_spark.session import construction_locked
+from spatialdata_spark.session import scoped_views
 
 AGG_FUNCS = {"sum": F.sum, "mean": F.avg, "count": F.count, "min": F.min, "max": F.max}
 
@@ -154,7 +154,6 @@ def _circle_cell_cover(circles_slim: DataFrame, h: float) -> DataFrame:
     )
 
 
-@construction_locked
 def aggregate_points_by_circles(
     points: DataFrame,
     shapes: DataFrame,
@@ -178,12 +177,14 @@ def aggregate_points_by_circles(
     computed as total_sum/total_count so results are bit-identical to a
     direct per-point aggregation for integer-valued doubles.
 
-    Plan construction is CONSOLIDATED into temp views + three
-    ``spark.sql`` parses (r15, guide §5-driver): the former DataFrame-op
-    chain cost ~800 py4j round trips ≈ 0.3-0.45 s of driver time per
-    action; the SQL text below reproduces the exact same expressions
-    (same literals via ``{x!r}D``, same operation order, same hints) so
-    the physical plan — and every result bit — is unchanged.  The plan
+    Plan construction is CONSOLIDATED into two ``spark.sql`` parses
+    over uniquely named temp views, each dropped as soon as its parse
+    returns (``session.scoped_views``; r15, guide §5-driver): the former
+    DataFrame-op chain cost ~800 py4j round trips ≈ 0.3-0.45 s of driver
+    time per action; the SQL text below reproduces the exact same
+    expressions (same literals via ``{x!r}D``, same operation order,
+    same hints) so the physical plan — and every result bit — is
+    unchanged.  The plan
     shape itself is documented inline; the r14 A/B numbers justifying
     each hint are in OPTIMIZATION_r14.md.
     """
@@ -199,25 +200,23 @@ def aggregate_points_by_circles(
     par = spark.sparkContext.defaultParallelism
     local = spark.sparkContext.master.startswith("local")
 
-    shapes.createOrReplaceTempView("__apc_shapes")
-    points.createOrReplaceTempView("__apc_points")
-
-    # --- the cell cover (see _circle_cell_cover for the geometry):
-    # circles project to (ccx, ccy, r), explode to covering grid cells,
-    # classified fully-inside vs boundary.  In local mode a small
-    # parquet input is often a single row group, so the scan — and
-    # everything narrow above it — runs in one task; the REPARTITION
-    # hint (same round-robin exchange df.repartition(n) builds) spreads
-    # the dim side before the explode.  The fact side is spread by the
-    # boundary join's ENSURE_REQUIREMENTS exchange.
-    hs = f"{h!r}D"
-    eps = f"({1e-9 * h!r}D + 1.0E-12D * ((abs(ccx) + abs(ccy)) + r))"
-    dxn = f"greatest((__qx * {hs}) - ccx, ccx - ((__qx * {hs}) + {hs}), 0.0D)"
-    dyn = f"greatest((__qy * {hs}) - ccy, ccy - ((__qy * {hs}) + {hs}), 0.0D)"
-    dxf = f"greatest(ccx - (__qx * {hs}), ((__qx * {hs}) + {hs}) - ccx)"
-    dyf = f"greatest(ccy - (__qy * {hs}), ((__qy * {hs}) + {hs}) - ccy)"
-    spread = f"/*+ REPARTITION({par}) */ " if local else ""
-    cells_sql = f"""
+    with scoped_views(spark, shapes) as (shapes_v,):
+        # --- the cell cover (see _circle_cell_cover for the geometry):
+        # circles project to (ccx, ccy, r), explode to covering grid cells,
+        # classified fully-inside vs boundary.  In local mode a small
+        # parquet input is often a single row group, so the scan — and
+        # everything narrow above it — runs in one task; the REPARTITION
+        # hint (same round-robin exchange df.repartition(n) builds) spreads
+        # the dim side before the explode.  The fact side is spread by the
+        # boundary join's ENSURE_REQUIREMENTS exchange.
+        hs = f"{h!r}D"
+        eps = f"({1e-9 * h!r}D + 1.0E-12D * ((abs(ccx) + abs(ccy)) + r))"
+        dxn = f"greatest((__qx * {hs}) - ccx, ccx - ((__qx * {hs}) + {hs}), 0.0D)"
+        dyn = f"greatest((__qy * {hs}) - ccy, ccy - ((__qy * {hs}) + {hs}), 0.0D)"
+        dxf = f"greatest(ccx - (__qx * {hs}), ((__qx * {hs}) + {hs}) - ccx)"
+        dyf = f"greatest(ccy - (__qy * {hs}), ((__qy * {hs}) + {hs}) - ccy)"
+        spread = f"/*+ REPARTITION({par}) */ " if local else ""
+        cells_sql = f"""
 SELECT *,
        (((r - {eps}) > 0.0D) AND ((({dxf} * {dxf}) + ({dyf} * {dyf})) <= ((r - {eps}) * (r - {eps})))) AS __full
 FROM (
@@ -226,119 +225,119 @@ FROM (
     FROM (
       SELECT *, explode(sequence(floor((ccx - r) / {hs}), floor((ccx + r) / {hs}))) AS __qx
       FROM (SELECT {spread}shape_id, ((minx + maxx) / 2) AS ccx, ((miny + maxy) / 2) AS ccy, radius AS r
-            FROM __apc_shapes)
+            FROM {shapes_v})
     )
   )
   WHERE (({dxn} * {dxn}) + ({dyn} * {dyn})) <= (r * r)
 )"""
-    # persist: the cover feeds both the full-cell and boundary branches;
-    # without it the explode subtree is computed twice per action
-    # (MEMORY_AND_DISK, slim rows ∝ dim side — safe at scale, ~20% win)
-    cells = spark.sql(cells_sql).persist()
-    cells.createOrReplaceTempView("__apc_cells")
+        # persist: the cover feeds both the full-cell and boundary branches;
+        # without it the explode subtree is computed twice per action
+        # (MEMORY_AND_DISK, slim rows ∝ dim side — safe at scale, ~20% win)
+        cells = spark.sql(cells_sql).persist()
 
-    categorical = value_col is not None and dict(points.dtypes).get(value_col) == "string"
-    vq = f"`{value_col}`" if value_col else None
+    with scoped_views(spark, points, cells) as (points_v, cells_v):
+        categorical = value_col is not None and dict(points.dtypes).get(value_col) == "string"
+        vq = f"`{value_col}`" if value_col else None
 
-    if categorical:
-        # the category string itself is the grouping code.  r14 carried a
-        # dictionary-encode here (int code through the boundary probe);
-        # r15 removed it: building the dictionary costs a FULL EXTRA PASS
-        # over the fact table (distinct + single-partition window) plus a
-        # broadcast join on every fact row and three driver-side broadcast
-        # builds per action, all to narrow one shuffle's rows by a few
-        # bytes — net negative at every scale measured (interleaved A/B:
-        # categorical med 2.50 → 1.64 s combined with the fp pre-agg
-        # below).  Results identical for non-NULL categories (the code
-        # was decoded back to the string before output anyway); a NULL
-        # category now forms its own group — standard SQL GROUP BY
-        # semantics, matching the DuckDB oracle — where the old
-        # dictionary inner-join silently dropped those points.
-        pt_sql = (
-            f"SELECT x, y, {vq} AS __code, "
-            f"floor(x / {h!r}D) AS __qx, floor(y / {h!r}D) AS __qy "
-            f"FROM __apc_points"
-        )
-    else:
-        keep = "x, y" + (f", {vq}" if value_col and value_col not in ("x", "y") else "")
-        pt_sql = (
-            f"SELECT {keep}, floor(x / {h!r}D) AS __qx, floor(y / {h!r}D) AS __qy "
-            f"FROM __apc_points"
-        )
+        if categorical:
+            # the category string itself is the grouping code.  r14 carried a
+            # dictionary-encode here (int code through the boundary probe);
+            # r15 removed it: building the dictionary costs a FULL EXTRA PASS
+            # over the fact table (distinct + single-partition window) plus a
+            # broadcast join on every fact row and three driver-side broadcast
+            # builds per action, all to narrow one shuffle's rows by a few
+            # bytes — net negative at every scale measured (interleaved A/B:
+            # categorical med 2.50 → 1.64 s combined with the fp pre-agg
+            # below).  Results identical for non-NULL categories (the code
+            # was decoded back to the string before output anyway); a NULL
+            # category now forms its own group — standard SQL GROUP BY
+            # semantics, matching the DuckDB oracle — where the old
+            # dictionary inner-join silently dropped those points.
+            pt_sql = (
+                f"SELECT x, y, {vq} AS __code, "
+                f"floor(x / {h!r}D) AS __qx, floor(y / {h!r}D) AS __qy "
+                f"FROM {points_v}"
+            )
+        else:
+            keep = "x, y" + (f", {vq}" if value_col and value_col not in ("x", "y") else "")
+            pt_sql = (
+                f"SELECT {keep}, floor(x / {h!r}D) AS __qx, floor(y / {h!r}D) AS __qy "
+                f"FROM {points_v}"
+            )
 
-    # partial-aggregation schema shared by the full-cell and boundary paths
-    if value_col is None or categorical:
-        partial, pcols, final = "COUNT(1) AS __n", ["__n"], "SUM(__n) AS n"
-    elif agg_func == "count":
-        partial, pcols, final = f"COUNT({vq}) AS __n", ["__n"], f"SUM(__n) AS `count_{value_col}`"
-    elif agg_func == "sum":
-        partial, pcols, final = f"SUM({vq}) AS __s", ["__s"], f"SUM(__s) AS `sum_{value_col}`"
-    elif agg_func == "mean":
-        partial, pcols, final = (
-            f"SUM({vq}) AS __s, COUNT({vq}) AS __n",
-            ["__s", "__n"],
-            f"(SUM(__s) / SUM(__n)) AS `mean_{value_col}`",
-        )
-    elif agg_func == "min":
-        partial, pcols, final = f"MIN({vq}) AS __m", ["__m"], f"MIN(__m) AS `min_{value_col}`"
-    else:  # max
-        partial, pcols, final = f"MAX({vq}) AS __m", ["__m"], f"MAX(__m) AS `max_{value_col}`"
+        # partial-aggregation schema shared by the full-cell and boundary paths
+        if value_col is None or categorical:
+            partial, pcols, final = "COUNT(1) AS __n", ["__n"], "SUM(__n) AS n"
+        elif agg_func == "count":
+            partial, pcols, final = f"COUNT({vq}) AS __n", ["__n"], f"SUM(__n) AS `count_{value_col}`"
+        elif agg_func == "sum":
+            partial, pcols, final = f"SUM({vq}) AS __s", ["__s"], f"SUM(__s) AS `sum_{value_col}`"
+        elif agg_func == "mean":
+            partial, pcols, final = (
+                f"SUM({vq}) AS __s, COUNT({vq}) AS __n",
+                ["__s", "__n"],
+                f"(SUM(__s) / SUM(__n)) AS `mean_{value_col}`",
+            )
+        elif agg_func == "min":
+            partial, pcols, final = f"MIN({vq}) AS __m", ["__m"], f"MIN(__m) AS `min_{value_col}`"
+        else:  # max
+            partial, pcols, final = f"MAX({vq}) AS __m", ["__m"], f"MAX(__m) AS `max_{value_col}`"
 
-    ck = ", __code" if categorical else ""  # categorical grouping key
-    ca_cols = ", ".join([f"ca.{c}" for c in (["__code"] if categorical else []) + pcols])
-    bp_keys = "bc.shape_id" + (", pt.__code" if categorical else "")
-    # per-shape combine of the partial columns (associative re-grouping of
-    # the same partials the final agg consumes — exact for count/min/max;
-    # sum/mean reorder a double summation that is already
-    # shuffle-order-nondeterministic in the final agg)
-    _comb = {"__m": "MIN" if agg_func == "min" else "MAX"}
-    fp_combine = ", ".join(f"{_comb.get(c, 'SUM')}({c}) AS {c}" for c in pcols)
-    # Plan shape (r14, verified in plans/):
-    # * cell_agg (ca): per-cell pre-aggregation straight off the scan —
-    #   the partial agg is map-side (guide §2.3), so only ~cell-count
-    #   partials cross the exchange.
-    # * full-cell branch: build side = the per-cell aggregate
-    #   (grid-bounded), stream side = the full-cell cover (∝ dim side ×
-    #   area/h²).  The un-hinted plan broadcast the COVER (1.6M-row
-    #   hash relation built per action); locally the hint flips it to
-    #   the ~cell-count side.  On a cluster both sides' sizes are
-    #   data-dependent, so the hint is local-gated and AQE picks the
-    #   strategy from runtime stats.
-    # * boundary branch: SHUFFLED HASH join on the cell key — the
-    #   boundary cover is perimeter-proportional but unbounded at scale
-    #   (never a safe broadcast), and the hint avoids both the
-    #   per-action driver-side hash-relation build of a broadcast AND
-    #   the sort of a sort-merge join; the fact side's
-    #   ENSURE_REQUIREMENTS exchange doubles as the local fan-out (r14
-    #   A/B: broadcast 2.93s, SHJ 2.21s, un-hinted 20.6s).  Skew at
-    #   cluster scale: the build side is the boundary cover, whose rows
-    #   per cell key are bounded by the shapes overlapping one cell —
-    #   grid-quantized, not value-skewed — and AQE's skew-join splitting
-    #   (enabled in session.py) also rewrites ShuffledHashJoin since
-    #   Spark 3.2, so a hot cell splits instead of OOMing the build.
-    bhint = "/*+ BROADCAST(ca) */ " if local else ""
-    # fp is PRE-AGGREGATED to shape granularity before the union (r15):
-    # without it the full-cell join's output (∝ dim side × area/h² rows)
-    # flows raw into the final union-aggregate stage, which cannot start
-    # until the boundary branch's shuffle finishes — the two branches
-    # serialize.  The per-shape GROUP BY puts a map-side partial below a
-    # ~shape-count exchange, so the fp stage runs CONCURRENTLY with the
-    # boundary stage and the final agg merges two tiny inputs
-    # (interleaved A/B: count med 1.63 → 1.16 s, categorical 2.50 → 1.64).
-    # The local REPARTITION pins the boundary shuffle at defaultParallelism:
-    # AQE coalesces it by map-output bytes (16 tasks at sf0.1), blind to
-    # the 52M-row probe explosion *inside* the join.  Local-gated like the
-    # broadcast hint — at cluster scale the map outputs are large enough
-    # that AQE's byte-based coalescing is the right owner.
-    repi = f"/*+ REPARTITION({par}, __qx, __qy) */ " if local else ""
-    main_sql = f"""
+        ck = ", __code" if categorical else ""  # categorical grouping key
+        ca_cols = ", ".join([f"ca.{c}" for c in (["__code"] if categorical else []) + pcols])
+        bp_keys = "bc.shape_id" + (", pt.__code" if categorical else "")
+        # per-shape combine of the partial columns (associative re-grouping of
+        # the same partials the final agg consumes — exact for count/min/max;
+        # sum/mean reorder a double summation that is already
+        # shuffle-order-nondeterministic in the final agg)
+        _comb = {"__m": "MIN" if agg_func == "min" else "MAX"}
+        fp_combine = ", ".join(f"{_comb.get(c, 'SUM')}({c}) AS {c}" for c in pcols)
+        # Plan shape (r14, verified in plans/):
+        # * cell_agg (ca): per-cell pre-aggregation straight off the scan —
+        #   the partial agg is map-side (guide §2.3), so only ~cell-count
+        #   partials cross the exchange.
+        # * full-cell branch: build side = the per-cell aggregate
+        #   (grid-bounded), stream side = the full-cell cover (∝ dim side ×
+        #   area/h²).  The un-hinted plan broadcast the COVER (1.6M-row
+        #   hash relation built per action); locally the hint flips it to
+        #   the ~cell-count side.  On a cluster both sides' sizes are
+        #   data-dependent, so the hint is local-gated and AQE picks the
+        #   strategy from runtime stats.
+        # * boundary branch: SHUFFLED HASH join on the cell key — the
+        #   boundary cover is perimeter-proportional but unbounded at scale
+        #   (never a safe broadcast), and the hint avoids both the
+        #   per-action driver-side hash-relation build of a broadcast AND
+        #   the sort of a sort-merge join; the fact side's
+        #   ENSURE_REQUIREMENTS exchange doubles as the local fan-out (r14
+        #   A/B: broadcast 2.93s, SHJ 2.21s, un-hinted 20.6s).  Skew at
+        #   cluster scale: the build side is the boundary cover, whose rows
+        #   per cell key are bounded by the shapes overlapping one cell —
+        #   grid-quantized, not value-skewed — and AQE's skew-join splitting
+        #   (enabled in session.py) also rewrites ShuffledHashJoin since
+        #   Spark 3.2, so a hot cell splits instead of OOMing the build.
+        bhint = "/*+ BROADCAST(ca) */ " if local else ""
+        # fp is PRE-AGGREGATED to shape granularity before the union (r15):
+        # without it the full-cell join's output (∝ dim side × area/h² rows)
+        # flows raw into the final union-aggregate stage, which cannot start
+        # until the boundary branch's shuffle finishes — the two branches
+        # serialize.  The per-shape GROUP BY puts a map-side partial below a
+        # ~shape-count exchange, so the fp stage runs CONCURRENTLY with the
+        # boundary stage and the final agg merges two tiny inputs
+        # (interleaved A/B: count med 1.63 → 1.16 s, categorical 2.50 → 1.64).
+        # The local REPARTITION pins the boundary shuffle at defaultParallelism:
+        # AQE coalesces it by map-output bytes (16 tasks at sf0.1), blind to
+        # the 52M-row probe explosion *inside* the join.  Local-gated like the
+        # broadcast hint — at cluster scale the map outputs are large enough
+        # that AQE's byte-based coalescing is the right owner.
+        repi = f"/*+ REPARTITION({par}, __qx, __qy) */ " if local else ""
+        main_sql = f"""
 WITH pt AS ({pt_sql}),
 ca AS (SELECT __qx, __qy{ck}, {partial} FROM pt GROUP BY __qx, __qy{ck}),
 fp AS (
   SELECT shape_id{ck}, {fp_combine}
   FROM (
     SELECT {bhint}f.shape_id, {ca_cols}
-    FROM (SELECT shape_id, __qx, __qy FROM __apc_cells WHERE __full) f
+    FROM (SELECT shape_id, __qx, __qy FROM {cells_v} WHERE __full) f
     JOIN ca ON f.__qx = ca.__qx AND f.__qy = ca.__qy
   )
   GROUP BY shape_id{ck}
@@ -346,7 +345,7 @@ fp AS (
 bp AS (
   SELECT /*+ SHUFFLE_HASH(bc) */ {bp_keys}, {partial}
   FROM (SELECT {repi}* FROM pt) pt
-  JOIN (SELECT {repi}shape_id, ccx, ccy, r, __qx, __qy FROM __apc_cells WHERE NOT __full) bc
+  JOIN (SELECT {repi}shape_id, ccx, ccy, r, __qx, __qy FROM {cells_v} WHERE NOT __full) bc
     ON pt.__qx = bc.__qx AND pt.__qy = bc.__qy
   WHERE (((pt.x - bc.ccx) * (pt.x - bc.ccx)) + ((pt.y - bc.ccy) * (pt.y - bc.ccy))) <= (bc.r * bc.r)
   GROUP BY bc.shape_id{ck}
@@ -354,9 +353,9 @@ bp AS (
 SELECT shape_id AS by_id{ck}, {final}
 FROM (SELECT * FROM fp UNION ALL SELECT * FROM bp)
 GROUP BY shape_id{ck}"""
-    if categorical:
-        main_sql = f"SELECT by_id, n, __code AS category FROM ({main_sql}\n)"
-    return spark.sql(main_sql)
+        if categorical:
+            main_sql = f"SELECT by_id, n, __code AS category FROM ({main_sql}\n)"
+        return spark.sql(main_sql)
 
 
 def _estimate_cell_size(shapes: DataFrame) -> float:
@@ -496,7 +495,6 @@ def _shape_kinds(df: DataFrame) -> frozenset[str]:
     return frozenset(r[0] for r in df.select("kind").distinct().collect())
 
 
-@construction_locked
 def grid_join_shapes_shapes(
     values: DataFrame,
     by: DataFrame,
@@ -528,7 +526,7 @@ def grid_join_shapes_shapes(
 
     if exprable_kinds:
         # Expression-only pairs (box/circle): the whole candidate join +
-        # exact refine is ONE spark.sql parse over two temp views (r15,
+        # exact refine is ONE spark.sql parse over two scoped temp views (r15,
         # guide §5-driver — the Column-tree construction of this branch
         # cost ~0.3 s of py4j round trips per action; the SQL reproduces
         # the identical expressions).  No local round-robin spread here:
@@ -536,8 +534,6 @@ def grid_join_shapes_shapes(
         # (each with the retry-safety pre-sort, guide §2.5) cost more
         # than the single-task evaluation saves (r14 A/B on
         # ag_fractions).
-        values.createOrReplaceTempView("__gjs_values")
-        by.createOrReplaceTempView("__gjs_by")
         css = f"{cs!r}D"
 
         def cells_sql(view: str, p: str) -> str:
@@ -576,16 +572,17 @@ def grid_join_shapes_shapes(
         # reference point = top-left corner of the bbox intersection; it
         # lies in exactly one grid cell, and both sides' cell sets cover
         # it — pure-expression dedup of multi-cell candidate duplicates
-        return spark.sql(
-            f"""
+        with scoped_views(spark, values, by) as (values_v, by_v):
+            return spark.sql(
+                f"""
 SELECT v_id, v_kind, v_wkb, v_minx, v_miny, v_maxx, v_maxy, v_radius,
        b_id, b_kind, b_wkb, b_minx, b_miny, b_maxx, b_maxy, b_radius
-FROM ({cells_sql("__gjs_values", "v")}) v
-JOIN ({cells_sql("__gjs_by", "b")}) b USING (__cx, __cy)
+FROM ({cells_sql(values_v, "v")}) v
+JOIN ({cells_sql(by_v, "b")}) b USING (__cx, __cy)
 WHERE (v_maxx >= b_minx) AND (v_minx <= b_maxx) AND (v_maxy >= b_miny) AND (v_miny <= b_maxy)
   AND ((floor(greatest(v_minx, b_minx) / {css}) = __cx) AND (floor(greatest(v_miny, b_miny) / {css}) = __cy))
   AND ({hit})"""
-        )
+            )
 
     if spark.sparkContext.master.startswith("local"):
         # see grid_join_points_shapes: spread single-task local scans —

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
-from spatialdata_spark.session import construction_locked
+from spatialdata_spark.session import scoped_views
 
 _MERSENNE = (1 << 61) - 1
 
@@ -277,7 +277,6 @@ def minhash_dedup(
     return docs.join(drop, id_col, "left_anti")
 
 
-@construction_locked
 def ngram_jaccard_join(
     docs: DataFrame,
     text_col: str = "text",
@@ -311,40 +310,41 @@ def ngram_jaccard_join(
         # single-row-group local inputs scan as one task; the shingle
         # HOF expression below is the heavy stage, so spread it first
         docs = docs.repartition(spark.sparkContext.defaultParallelism)
-    # Plan construction consolidated into two spark.sql parses (r15,
-    # guide §5-driver): the former Column-op chain cost ~350 py4j round
-    # trips ≈ 0.1 s of driver time per action.  The SQL reproduces the
-    # exact same expressions (split/filter tokenizer, sequence+transform
-    # shingler with the chr(30) separator, CASE fallback, double-cast
-    # Jaccard), so the physical plan and every result bit are unchanged.
+    # Plan construction consolidated into two spark.sql parses over
+    # scoped temp views (session.scoped_views; r15, guide §5-driver):
+    # the former Column-op chain cost ~350 py4j round trips ≈ 0.1 s of
+    # driver time per action.  The SQL reproduces the exact same
+    # expressions (split/filter tokenizer, sequence+transform shingler
+    # with the chr(30) separator, CASE fallback, double-cast Jaccard),
+    # so the physical plan and every result bit are unchanged.
     sep = "\x1e"
-    docs.createOrReplaceTempView("__ngj_docs")
     grams = ", ".join(f"element_at(_w, i + {j + 1})" for j in range(n))
     # materialization barrier: the interpreted HOF shingle expression is
     # consumed by four branches (a, b, and both size lookups); without
     # the persist Catalyst inlines it into every scan AND its pushed
     # filters, evaluating it ~10x per document
-    doc_sh = spark.sql(
-        f"""
+    with scoped_views(spark, docs) as (docs_v,):
+        doc_sh = spark.sql(
+            f"""
 SELECT _id,
        CASE WHEN size(_w) >= {n}
             THEN array_distinct(transform(sequence(0, size(_w) - {n}),
                                           i -> concat_ws('{sep}', {grams})))
             ELSE CAST(array() AS array<string>) END AS _sh
 FROM (SELECT `{id_col}` AS _id, filter(split(`{text_col}`, '\\\\s+'), x -> x != '') AS _w
-      FROM __ngj_docs)"""
-    ).persist()
-    doc_sh.createOrReplaceTempView("__ngj_sh")
-    if max_shingle_freq is not None:
-        exploded_cte = f"""
-  SELECT e._id, e.g FROM (SELECT _id, explode(_sh) AS g FROM __ngj_sh) e
-  LEFT SEMI JOIN (SELECT g FROM (SELECT _id, explode(_sh) AS g FROM __ngj_sh)
+      FROM {docs_v})"""
+        ).persist()
+    with scoped_views(spark, doc_sh) as (sh_v,):
+        if max_shingle_freq is not None:
+            exploded_cte = f"""
+  SELECT e._id, e.g FROM (SELECT _id, explode(_sh) AS g FROM {sh_v}) e
+  LEFT SEMI JOIN (SELECT g FROM (SELECT _id, explode(_sh) AS g FROM {sh_v})
                   GROUP BY g HAVING COUNT(1) <= {int(max_shingle_freq)}) k
   ON e.g = k.g"""
-    else:
-        exploded_cte = "SELECT _id, explode(_sh) AS g FROM __ngj_sh"
-    return spark.sql(
-        f"""
+        else:
+            exploded_cte = f"SELECT _id, explode(_sh) AS g FROM {sh_v}"
+        return spark.sql(
+            f"""
 WITH exploded AS ({exploded_cte}),
 inter AS (
   SELECT a._id AS id_a, b._id AS id_b, COUNT(1) AS n_inter
@@ -352,7 +352,7 @@ inter AS (
   WHERE a._id < b._id
   GROUP BY a._id, b._id
 ),
-sizes AS (SELECT _id, size(_sh) AS n_sh FROM __ngj_sh)
+sizes AS (SELECT _id, size(_sh) AS n_sh FROM {sh_v})
 SELECT id_a, id_b, jaccard
 FROM (
   SELECT inter.id_a, inter.id_b,
@@ -362,7 +362,7 @@ FROM (
              JOIN sizes sb ON inter.id_b = sb._id
 )
 WHERE jaccard >= {threshold!r}D"""
-    )
+        )
 
 
 def ngram_containment_pairs(
@@ -636,7 +636,6 @@ def _minhash_sig_udf(num_hashes: int, shingle_k: int, seed: int):
     return _sig
 
 
-@construction_locked
 def minhash_band_candidates(
     docs: DataFrame,
     text_col: str = "text",
@@ -668,8 +667,9 @@ def minhash_band_candidates(
     minh = docs.select(
         F.col(id_col), _minhash_sig_udf(num_hashes, shingle_k, seed)(F.col(text_col)).alias("sig")
     )
-    # Plan construction is CONSOLIDATED to one spark.sql parse below the
-    # signature step (r15, guide §5-driver): the band-slice Column chain
+    # Plan construction is CONSOLIDATED to two spark.sql parses over
+    # scoped temp views (session.scoped_views) below the signature step
+    # (r15, guide §5-driver): the band-slice Column chain
     # + self-join + groupBy cost ~245 py4j round trips ≈ 0.1-0.4 s of
     # driver time per action; the SQL reproduces the identical
     # expressions (same slice offsets, same join conjuncts, same
@@ -679,11 +679,11 @@ def minhash_band_candidates(
         f"slice(sig, {i * rows_per_band + 1}, {rows_per_band})"
         for i in range(num_hashes // rows_per_band)
     )
-    minh.createOrReplaceTempView("__mh_minh")
-    bands = spark.sql(
-        f"SELECT {iq}, t.band, t.sig FROM __mh_minh "
-        f"LATERAL VIEW posexplode(array({slices})) t AS band, sig"
-    )
+    with scoped_views(spark, minh) as (minh_v,):
+        bands = spark.sql(
+            f"SELECT {iq}, t.band, t.sig FROM {minh_v} "
+            f"LATERAL VIEW posexplode(array({slices})) t AS band, sig"
+        )
     # persist the band table: the self-join consumes it twice (build +
     # stream side), and without a persist each side re-runs the whole
     # signature UDF.  This is the standard LSH shape at any scale — the
@@ -691,14 +691,14 @@ def minhash_band_candidates(
     # the text they index, and MEMORY_AND_DISK spills instead of OOMing
     # on a cluster.  Spark's LRU eviction reclaims it after the query.
     bands = bands.persist(StorageLevel.MEMORY_AND_DISK)
-    bands.createOrReplaceTempView("__mh_bands")
     bhint = "/*+ BROADCAST(r) */ " if local else ""
-    return spark.sql(
-        f"SELECT {bhint}l.{iq} AS id_a, r.{iq} AS id_b, COUNT(1) AS n_bands\n"
-        f"FROM __mh_bands l JOIN __mh_bands r\n"
-        f"  ON l.band = r.band AND l.sig = r.sig AND l.{iq} < r.{iq}\n"
-        f"GROUP BY l.{iq}, r.{iq}"
-    )
+    with scoped_views(spark, bands) as (bands_v,):
+        return spark.sql(
+            f"SELECT {bhint}l.{iq} AS id_a, r.{iq} AS id_b, COUNT(1) AS n_bands\n"
+            f"FROM {bands_v} l JOIN {bands_v} r\n"
+            f"  ON l.band = r.band AND l.sig = r.sig AND l.{iq} < r.{iq}\n"
+            f"GROUP BY l.{iq}, r.{iq}"
+        )
 
 
 def minhash_band_candidates_sql(

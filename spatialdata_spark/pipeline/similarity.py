@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from spatialdata_spark.session import construction_locked
+from spatialdata_spark.session import scoped_views
 
 
 def _dot_expr(a, b):
@@ -49,7 +49,6 @@ def cosine_topk_query(
     )
 
 
-@construction_locked
 def cosine_topk_subquery(
     embeddings: DataFrame,
     query: DataFrame,
@@ -70,25 +69,24 @@ def cosine_topk_subquery(
     ulp at most — callers ranking on cosine should have margins far
     above that, as the brute-force corpus here does)."""
     spark = embeddings.sparkSession
-    embeddings.createOrReplaceTempView("__ctq_emb")
-    query.createOrReplaceTempView("__ctq_query")
-    return spark.sql(
-        f"""
+    with scoped_views(spark, embeddings, query) as (emb_v, query_v):
+        return spark.sql(
+            f"""
 WITH q AS (
   SELECT CAST(`{vec_col}` AS array<double>) AS __qv,
          sqrt(aggregate(transform(CAST(`{vec_col}` AS array<double>), x -> x * x),
                         0.0D, (acc, v) -> acc + v)) AS __qn
-  FROM __ctq_query
+  FROM {query_v}
 )
 SELECT /*+ BROADCAST(q) */ `{id_col}`,
        aggregate(zip_with(CAST(`{vec_col}` AS array<double>), __qv, (x, y) -> x * y),
                  0.0D, (acc, v) -> acc + v)
        / (sqrt(aggregate(transform(CAST(`{vec_col}` AS array<double>), x -> x * x),
                0.0D, (acc, v) -> acc + v)) * __qn) AS cosine
-FROM __ctq_emb CROSS JOIN q
+FROM {emb_v} CROSS JOIN q
 ORDER BY cosine DESC, `{id_col}`
 LIMIT {int(k)}"""
-    )
+        )
 
 
 def cosine_self_join_topk(

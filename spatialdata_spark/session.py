@@ -10,34 +10,39 @@ the DuckDB oracle (duckdb timestamps are UTC-naive).
 
 from __future__ import annotations
 
-import functools
+import contextlib
 import os
-import threading
+import uuid
 
-from pyspark.sql import SparkSession
-
-# Serializes plan CONSTRUCTION for operators that register fixed-name
-# session-global temp views and resolve them in the same call
-# (circle-aggregation, grid shapes-join, ngram/minhash dedup, knn
-# subquery): two threads interleaving registration and spark.sql()
-# analysis could silently resolve one thread's view names against the
-# other's data.  Once built, a DataFrame's analyzed plan is immutable
-# and safe to EXECUTE from any thread — only construction serializes.
-# Reentrant: composed operators (dedup_keep_best -> band candidates)
-# nest acquisitions.
-PLAN_CONSTRUCTION_LOCK = threading.RLock()
+from pyspark.sql import DataFrame, SparkSession
 
 
-def construction_locked(fn):
-    """Decorator: hold PLAN_CONSTRUCTION_LOCK for the duration of an
-    operator's plan construction (~100-300 ms driver-side)."""
+@contextlib.contextmanager
+def scoped_views(spark: SparkSession, *frames: DataFrame):
+    """Register each frame as a temp view under a fresh ``__sd_<uuid>``
+    name and yield the names, for ``spark.sql`` text built in an
+    f-string; every name is dropped on exit.
 
-    @functools.wraps(fn)
-    def wrapper(*args, **kwargs):
-        with PLAN_CONSTRUCTION_LOCK:
-            return fn(*args, **kwargs)
-
-    return wrapper
+    ``spark.sql`` analyses eagerly, so the DataFrame it returns no longer
+    needs the view: leave the scope as soon as the last parse that reads
+    it has returned.  Unique names mean no caller's view is replaced and
+    concurrent construction needs no lock.  The drop goes through the
+    session catalog, which removes only the name: the public
+    ``Catalog.dropTempView`` (and ``spark.sql(text, **frames)``, which
+    calls it) also uncaches every cached plan equal to the view's, which
+    would silently drop a caller's persisted input or an operator's
+    persisted intermediate."""
+    catalog = spark._jsparkSession.sessionState().catalog()
+    names: list[str] = []
+    try:
+        for df in frames:
+            name = f"__sd_{uuid.uuid4().hex}"
+            df.createTempView(name)
+            names.append(name)
+        yield tuple(names)
+    finally:
+        for name in names:
+            catalog.dropTempView(name)
 
 
 def get_spark(app_name: str = "spatialdata-spark", cores: int | None = None) -> SparkSession:

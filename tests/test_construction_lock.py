@@ -1,9 +1,9 @@
-"""Pin the plan-construction thread-safety contract (r15 review fix):
-operators that register fixed-name session-global temp views
-(circle-aggregation here as the representative) hold
-PLAN_CONSTRUCTION_LOCK through registration + spark.sql analysis, so
-concurrent library callers on one session can never resolve their view
-names against another thread's data."""
+"""Pin the plan-construction thread-safety contract: operators that
+build ``spark.sql`` text over temp views (circle-aggregation here as the
+representative) register them under unique names through
+``session.scoped_views``, so concurrent library callers on one session
+can never resolve their view names against another thread's data.
+tests/test_scoped_views.py covers all five such operators."""
 
 from __future__ import annotations
 

@@ -297,17 +297,21 @@ def test_zonal_quantiles_long(spark):
     assert abs(r["q75"] - 10.25) < 1e-12
 
 
-# the pyspark release whose private calls _map_in_pandas_cached and
-# _apply_in_pandas_cached were checked against
+# the pyspark release whose private calls (_map_in_pandas_cached,
+# _apply_in_pandas_cached, session.scoped_views) were checked against
 PYSPARK_CHECKED = "4.1.2"
 
 
-def test_private_pyspark_calls_are_pinned():
+def test_private_pyspark_calls_are_pinned(spark):
     """``_map_in_pandas_cached`` calls ``df._jdf.mapInPandas(jc, False,
     None)`` and ``_apply_in_pandas_cached`` calls
     ``grouped._jgd.flatMapGroupsInPandas(jc)``: private signatures that
     have drifted between pyspark releases before.  Both mirror the
-    public mixin bodies, so an upgrade must re-check them."""
+    public mixin bodies, so an upgrade must re-check them.
+    ``session.scoped_views`` drops its views with
+    ``_jsparkSession.sessionState().catalog().dropTempView(name)``, which
+    must remove the name and leave the cache alone (the public
+    ``Catalog.dropTempView`` also uncaches the view's plan)."""
     import inspect
 
     import pyspark
@@ -317,9 +321,11 @@ def test_private_pyspark_calls_are_pinned():
     assert pyspark.__version__ == PYSPARK_CHECKED, (
         f"pyspark {pyspark.__version__} is installed, but the private calls in "
         "spatialdata_spark/operators/raster.py (_jdf.mapInPandas(jc, False, None) and "
-        f"_jgd.flatMapGroupsInPandas(jc)) were checked on pyspark {PYSPARK_CHECKED}: "
-        "compare them with PandasMapOpsMixin.mapInPandas and "
-        "PandasGroupedOpsMixin.applyInPandas of the new release, then update PYSPARK_CHECKED"
+        "_jgd.flatMapGroupsInPandas(jc)) and spatialdata_spark/session.py "
+        "(_jsparkSession.sessionState().catalog().dropTempView(name)) were checked on "
+        f"pyspark {PYSPARK_CHECKED}: compare them with PandasMapOpsMixin.mapInPandas, "
+        "PandasGroupedOpsMixin.applyInPandas and SessionCatalog.dropTempView of the new "
+        "release, then update PYSPARK_CHECKED"
     )
     assert "self._jdf.mapInPandas(udf_column._jc, barrier, jrp)" in inspect.getsource(
         PandasMapOpsMixin.mapInPandas
@@ -327,3 +333,16 @@ def test_private_pyspark_calls_are_pinned():
     assert "self._jgd.flatMapGroupsInPandas(udf_column._jc)" in inspect.getsource(
         PandasGroupedOpsMixin.applyInPandas
     )
+    df = spark.range(3).persist()
+    try:
+        df.count()
+        df.createTempView("__pin_drop_temp_view")
+        dropped = spark._jsparkSession.sessionState().catalog().dropTempView("__pin_drop_temp_view")
+        assert dropped and not spark.catalog.tableExists("__pin_drop_temp_view"), (
+            "sessionState().catalog().dropTempView(name) no longer drops the view"
+        )
+        assert df.storageLevel.useMemory, (
+            "sessionState().catalog().dropTempView(name) uncached the view's plan"
+        )
+    finally:
+        df.unpersist()
